@@ -2,34 +2,12 @@
 
 ``entry(spark)`` smoke-runs the flagship query at sf0.001;
 ``queries()``/``oracle_sql()`` expose the full named workload from
-``adb_south_caucasus_etl_spark.workload`` for the DuckDB correctness gate.
-
-Ordering: the driver's correctness gate stamps a bounded window of
-``queries()`` entries per round (r2 stamped exactly the first 50 in
-registration order, leaving 77 queries with only local verification).
-``queries()``/``oracle_sql()`` therefore emit entries sorted by
-(latest-stamp-red first, DIRTY second, never-stamped third, then
-OLDEST latest-stamp round, stamp count, registration order) — computed
-from the ``CORRECTNESS_r*.json`` files
-the driver leaves at the repo root plus the ``STAMP_SOURCES.json``
-sidecar (``tools/stamp_sources.py rebuild``, git-reconstructed
-hash-at-last-stamp per query). A query whose most recent stamp was red
-jumps the queue so its fix is re-verified next round; a DIRTY query —
-its ``@register`` block rewritten since the code its latest stamp
-verified (r7 verdict item 1: three rewrites shipped with stale green
-stamps), or force-listed in ``FORCE_RESTAMP`` after an operator-module
-rewrite the block hash can't see — comes next; then never-stamped
-queries, so a fixed-size window still rotates through the whole
-workload and every query eventually accumulates a driver-stamped
-correctness row on the plan it currently ships.
+``adb_south_caucasus_etl_spark.workload`` for the DuckDB correctness gate,
+in registration order.
 """
 
 from __future__ import annotations
 
-import glob
-import json
-import os
-import re
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
@@ -37,7 +15,6 @@ from pyspark.sql import DataFrame, SparkSession
 from adb_south_caucasus_etl_spark.workload import WORKLOAD, cube_flagship_revenue
 
 SF0001 = "/root/testdata/sf0.001"
-_REPO = os.path.dirname(os.path.abspath(__file__))
 
 
 def entry(spark: SparkSession) -> DataFrame:
@@ -45,248 +22,14 @@ def entry(spark: SparkSession) -> DataFrame:
     return cube_flagship_revenue(spark, SF0001)
 
 
-def _stamp_state() -> tuple[dict[str, int], set[str], dict[str, int]]:
-    """Per-query driver-stamp count, the set of latest-stamp-red queries,
-    and the round number of each query's most recent stamp.
-
-    A stamp is any row in a CORRECTNESS_r*.json — green, rows-only
-    (err == 'no_oracle'), or red: the point is the driver has looked.
-    A row is *red* when it errored (other than the declared no-oracle
-    sentinel) or any of the match flags came back False; a query is
-    latest-red when its most recent stamp is red — those must re-enter
-    the window immediately so fixes get re-verified next round instead
-    of waiting behind the never-stamped backlog. The latest-stamp round
-    feeds the freshness rotation (VERDICT r10 item 4): with the
-    never-stamped backlog at zero, idle window slots refresh the
-    oldest-stamped queries first, so stamp age climbs fleet-wide instead
-    of 53 queries riding their r1 stamp forever.
-    """
-    counts: dict[str, int] = {}
-    latest: dict[str, bool] = {}
-    latest_round: dict[str, int] = {}
-
-    def round_no(path: str) -> int:
-        # sort by the PARSED round number — lexicographic order would put
-        # r100 before r11 once rounds reach three digits, silently
-        # deriving 'latest' (and the red-first rotation) from a stale file
-        m = re.search(r"CORRECTNESS_r(\d+)\.json$", os.path.basename(path))
-        return int(m.group(1)) if m else -1
-
-    for path in sorted(
-        glob.glob(os.path.join(_REPO, "CORRECTNESS_r*.json")), key=round_no
-    ):
-        try:
-            with open(path, encoding="utf-8") as fh:
-                rows = json.load(fh)
-        except (OSError, ValueError):
-            continue
-        if not isinstance(rows, dict):
-            continue
-        rno = round_no(path)
-        for name, row in rows.items():
-            counts[name] = counts.get(name, 0) + 1
-            latest_round[name] = rno
-            red = False
-            if isinstance(row, dict):
-                err = row.get("err")
-                if err not in (None, "no_oracle"):
-                    red = True
-                for flag in ("rows_match", "schema_match", "hash_match"):
-                    if row.get(flag) is False:
-                        red = True
-            latest[name] = red
-    return (
-        counts,
-        {name for name, red in latest.items() if red},
-        latest_round,
-    )
-
-
-#: queries whose shipped plan changed OUTSIDE their @register block (an
-#: operator-module rewrite the block hash cannot see) — manually promoted
-#: into the dirty tier until a fresh driver stamp lands, then pruned.
-#: The r7 entries (graph_triangle_count, ml_ranking_metrics) were pruned
-#: after their green r08 stamps; the r9 stat-driven-grid cohort was
-#: pruned after its four green r09 stamps (VERDICT r09 item 3) — and
-#: RE-ENTERS for a new r10 reason: derived_gemm_grid now sizes from
-#: footer-true parquet row counts / exact filtered-scan counts with the
-#: estimate headroom dropped for trusted sizes (VERDICT r09 item 8), so
-#: the derived physical grids of all four transitive call sites changed
-#: class again (results invariant — exact operators; oracle-green at
-#: sf0.001/0.01/0.1 this round). The four r10 GEMM entries were pruned
-#: after their green r10 stamps (VERDICT r10 item 2). Current cohort:
-#: the three r10 perceptual entries (shared frame-hash pipeline pinned
-#: via localCheckpoint in operators/multimodal.py) were pruned after
-#: their green r11 stamps landed (VERDICT r11 round ritual). Current
-#: cohort (r13): ann_ivf_trained_topk — operators/similarity.py gained a
-#: NULL-query-vector guard inside ivf_trained_topk (ADVICE r12; results
-#: invariant on the non-NULL fixture, plan gained one filter), which the
-#: block hash cannot see; its recall-audit twin re-enters automatically
-#: via its own block edit (countDistinct n_queries). Current cohort
-#: (r14): the three IVF-PQ entries whose build path was refactored in
-#: operators/similarity.py (ivf_pq_index's normalize+encode split into
-#: the shared _unit_vectors/_pq_encode_postings used by ivf_pq_append;
-#: results invariant — the append-identity pytest pins byte-equality —
-#: but the blocks can't see the module edit). ann_ivf_pq_persisted_serve
-#: re-enters automatically via its own block edit (pruned+salted serve).
-#: The r14 cohort (ann_ivf_trained_topk + three IVF-PQ entries) was pruned
-#: after its four r14 stamps landed (2 hash-green audits + 2 rows-only
-#: by declared necessity — VERDICT r14 round ritual). Current cohort
-#: (r15): the optimization round's operator-module edits — every query
-#: whose EXECUTED PLAN changed while its @register block did not:
-#: the jaccard_pairs restructure + connected_components pin/flag-fold
-#: (operators/dedup.py), the IVF-PQ persist/append/compact/probe pass
-#: cuts (operators/similarity.py), and the triangle-count pins
-#: (operators/graph.py). Results verified invariant locally (full
-#: 434/434 oracle sweep + per-query tri-SF checks, OPTIMIZATION_r15.md)
-#: — listed so the driver restamps them too. Blocks edited this round
-#: (attribution, maintenance ×2, ml_dbscan, text_repetition, pagerank
-#: ×2, 3 streaming sites) re-enter via sidecar-hash dirtiness. The
-#: streaming stream_shuffle_scope consumers are NOT listed: the scoped
-#: conf changes state-store partitioning only, which is not observable
-#: in any result (all 26 streaming queries re-verified), and listing
-#: ~20 more would crowd the oldest-cohort drain out of the 50-slot
-#: window.
-FORCE_RESTAMP: set[str] = {
-    "neardup_jaccard_pairs",
-    "neardup_char_ngram_jaccard",
-    "neardup_clusters",
-    "neardup_clusters_star",
-    "neardup_survivors",
-    "er_entity_canonicalize",
-    "curation_split_leakage_audit",
-    "dedup_cross_modal_overlap",
-    "dedup_lexical_semantic_overlap",
-    "corpus_dedup_pipeline",
-    "corpus_dedup_pipeline_lsh",
-    "corpus_dedup_pipeline_lsh_agreement",
-    "corpus_dedup_pipeline_semantic",
-    "corpus_dedup_pipeline_semantic_trained",
-    "corpus_dedup_pipeline_semantic_trained_agreement",
-    # r15 third window: ivf_pq_index/persist control-plane restructure
-    # (shared pinned unit frame + overlapped metadata jobs) — results
-    # verified bit-identical (centroid identity pytest + 14/14 oracle),
-    # listed so the driver restamps the three family members not
-    # already below.
-    "ann_ivf_pq_topk",
-    "ann_ivf_pq_recall_audit",
-    "ann_ivf_pq_memory_audit",
-    "ann_ivf_pq_persisted_serve",
-    "ann_ivf_pq_append_serve",
-    "ann_ivf_pq_append_ledger",
-    "ann_ivf_pq_append_recall_audit",
-    "ann_ivf_pq_delete_serve",
-    "ann_ivf_pq_delete_reclaim_ledger",
-    "ann_ivf_pq_compact_roundtrip",
-    "ann_ivf_pq_planted_recall_audit",
-    "streaming_ivf_pq_ingest_ledger",
-    "graph_triangle_count",
-    # r16: connected_components symmetrizes via one explode pass (plan
-    # change in every CC consumer; the other consumers are already
-    # listed above for the r15/r16 jaccard reshapes) — results verified
-    # oracle-green at sf0.01.
-    "ml_dbscan_embed",
-    # r16: pagerank_integer loop joins pinned to SHUFFLE_HASH via
-    # per-join hints (operators/graph.py — @register blocks untouched);
-    # integer arithmetic, strategy is value-neutral, oracle-green at
-    # sf0.01 and bit-identical A/B'd in-session.
-    "graph_pagerank_integer",
-    "graph_ppr_integer",
-}
-
-
-def _dirty_names() -> set[str]:
-    """Stamped queries whose @register block no longer matches the code
-    their latest driver stamp verified (sidecar: STAMP_SOURCES.json,
-    rebuilt from git by tools/stamp_sources.py), plus FORCE_RESTAMP.
-    Best-effort: a missing/corrupt sidecar degrades to FORCE_RESTAMP
-    only, never to an import failure — the driver must always get a
-    valid ordering."""
-    dirty = set(FORCE_RESTAMP)
-    try:
-        with open(
-            os.path.join(_REPO, "STAMP_SOURCES.json"), encoding="utf-8"
-        ) as fh:
-            sidecar = json.load(fh)
-        from adb_south_caucasus_etl_spark.stamphash import query_block_hashes
-
-        with open(
-            os.path.join(
-                _REPO, "adb_south_caucasus_etl_spark", "workload.py"
-            ),
-            encoding="utf-8",
-        ) as fh:
-            current = query_block_hashes(fh.read())
-        for name, rec in sidecar.items():
-            cur = current.get(name)
-            if cur is not None and cur != rec.get("hash"):
-                dirty.add(name)
-    except Exception as exc:  # degrade, but visibly (ADVICE r08)
-        import sys
-
-        print(
-            "warning: dirty-stamp tracking degraded to FORCE_RESTAMP only "
-            f"({type(exc).__name__}: {exc}) — rerun tools/stamp_sources.py "
-            "rebuild",
-            file=sys.stderr,
-        )
-    return dirty
-
-
-#: tie-break WITHIN an equal driver-stamp count (never jumps red/dirty or
-#: a lower count): queries whose verification carries outsized weight.
-#: The five exact audit twins are the certification chain for every
-#: rows-only sketch/LSH query — mid-pack registration order would leave
-#: them behind 60+ other never-stamped queries (VERDICT r08 item 3).
-PRIORITY_STAMP = {
-    "sketch_hll_error_audit",
-    "sketch_quantile_rank_audit",
-    "ann_ivf_recall_audit",
-    "ann_ivf_trained_recall_audit",
-    "simhash_determinism_audit",
-    "ml_kmeans_assign_audit",
-}
-
-
-def _ordered_names() -> list[str]:
-    counts, reds, latest_round = _stamp_state()
-    dirty = _dirty_names()
-    reg_order = {name: i for i, name in enumerate(WORKLOAD)}
-    return sorted(
-        WORKLOAD,
-        key=lambda n: (
-            n not in reds,
-            n not in dirty,
-            counts.get(n, 0) != 0,
-            # freshness rotation (VERDICT r10 item 4, fixed r12): with
-            # the never-stamped backlog at zero, idle window slots
-            # refresh the OLDEST latest-stamp first, so min stamp age
-            # climbs every round. The r11 key put TOTAL stamp count
-            # before age, which inverted the drain once the oldest
-            # cohort was also the most-stamped (the r2-era 40 carry
-            # r1+r2 stamps = count 2, so every count-1 query from r3/r4
-            # outranked them and the r2 bucket would never empty —
-            # exactly what VERDICT r11 item 1 requires). Age now
-            # dominates; count breaks ties within an age bucket.
-            latest_round.get(n, 0),
-            counts.get(n, 0),
-            n not in PRIORITY_STAMP,
-            reg_order[n],
-        ),
-    )
-
-
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    """One entry per implemented operator from SURVEY.md §2
-    (least-driver-stamped first — see module docstring)."""
-    return {name: WORKLOAD[name].fn for name in _ordered_names()}
+    """One entry per implemented operator from SURVEY.md §2."""
+    return {name: e.fn for name, e in WORKLOAD.items()}
 
 
 def oracle_sql() -> dict[str, str]:
     """DuckDB-runnable ANSI SQL oracle per query; non-SQL-expressible ops
     (oracle=None) are omitted → driver records a rows-only check."""
     return {
-        name: WORKLOAD[name].oracle
-        for name in _ordered_names()
-        if WORKLOAD[name].oracle is not None
+        name: e.oracle for name, e in WORKLOAD.items() if e.oracle is not None
     }

@@ -13,11 +13,50 @@ import os
 
 from pyspark.sql import SparkSession
 
+_MAX_DRIVER_MIB = 16 * 1024
+
+
+def _memory_limit_bytes() -> int | None:
+    """Memory this process may use: the smallest of the cgroup limit (v2
+    ``memory.max`` or v1 ``memory.limit_in_bytes``) and ``MemTotal``;
+    None when none can be read."""
+    limits = []
+    for path in (
+        "/sys/fs/cgroup/memory.max",
+        "/sys/fs/cgroup/memory/memory.limit_in_bytes",
+    ):
+        try:
+            with open(path, encoding="ascii") as fh:
+                raw = fh.read().strip()
+        except OSError:
+            continue
+        if raw.isdigit():
+            limits.append(int(raw))
+    try:
+        with open("/proc/meminfo", encoding="ascii") as fh:
+            for line in fh:
+                if line.startswith("MemTotal:"):
+                    limits.append(int(line.split()[1]) * 1024)
+                    break
+    except (OSError, ValueError, IndexError):
+        pass
+    return min(limits) if limits else None
+
+
+def default_driver_memory() -> str:
+    """``spark.driver.memory`` default: min(16g, half the memory limit)."""
+    limit = _memory_limit_bytes()
+    if limit is None:
+        return f"{_MAX_DRIVER_MIB}m"
+    return f"{min(_MAX_DRIVER_MIB, limit // 2 // (1 << 20))}m"
+
 
 def get_spark(app_name: str = "adb_south_caucasus_etl_spark") -> SparkSession:
     """Build (or fetch) the SparkSession.
 
-    ``SPARK_GRAFT_CPUS`` controls local parallelism (default ``*``).
+    ``SPARK_GRAFT_CPUS`` controls local parallelism (default ``*``);
+    ``SPARK_GRAFT_DRIVER_MEM`` overrides the heap (default
+    :func:`default_driver_memory`).
     Shuffle partitions are sized to the local core count — on a real
     cluster you'd size to 2-3x total executor cores and let AQE coalesce.
     """
@@ -38,28 +77,10 @@ def get_spark(app_name: str = "adb_south_caucasus_etl_spark") -> SparkSession:
         # keeps unix_micros()/window() applicable regardless of which writer
         # produced the files (the driver testdata has shipped both flavors)
         .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-        # Join strategy: SORT-MERGE default (Spark's own), re-adjudicated
-        # r16 per VERDICT r15 item 1a. The r15 session-wide flip to
-        # shuffled-hash was re-measured this round: (a) the 16 headline
-        # queries' final plans are IDENTICAL under both configs at sf0.1
-        # (every join is broadcast — plans/r16/join_ab evidence), so the
-        # flip could not have caused the driver's headline regression;
-        # (b) the only 9 queries whose plans contain a ShuffledHashJoin
-        # A/B'd as ties within noise (interleaved min/median, 5 reps).
-        # With zero measured local win, the tiebreaker is the 100 TB §5
-        # risk: SHJ builds per-partition hash maps and OOMs where SMJ
-        # spills, so session-wide SHJ is wrong for a scale-first engine.
-        # Queries where SHJ provably wins pin it per-join with a
-        # SHUFFLE_HASH hint; clusters with known memory geometry can
-        # still flip these env knobs.
-        .config(
-            "spark.sql.join.preferSortMergeJoin",
-            os.environ.get("SPARK_GRAFT_PREFER_SMJ", "true"),
-        )
-        .config(
-            "spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold",
-            os.environ.get("SPARK_GRAFT_SHJ_LOCALMAP", "0"),
-        )
+        # Join strategy: Spark's own sort-merge default stays session-wide
+        # because SMJ spills where shuffled-hash builds per-partition hash
+        # maps and OOMs at 100 TB (SCALE.md §5); queries where SHJ
+        # provably wins pin it per join with a SHUFFLE_HASH hint.
         # Answer MIN/MAX/COUNT-shaped scans from parquet footer
         # statistics instead of reading row groups — the ledger/census
         # queries in this workload count just-written scratch tables,
@@ -81,9 +102,13 @@ def get_spark(app_name: str = "adb_south_caucasus_etl_spark") -> SparkSession:
         # whole engine's heap: 8g made 32 task threads GC/spill on the
         # shuffle-heavy graph/kNN queries (-25% at 16g: triangle 8.1->7.0s,
         # kNN 6.4->4.7s), while heaps past 16g start taxing the sub-second
-        # queries (GC geometry). On a real cluster this maps to executor
-        # memory instead.
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
+        # queries (GC geometry). The default is capped at half the memory
+        # this process may use, so a smaller box is not OOM-killed. On a
+        # real cluster this maps to executor memory instead.
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_GRAFT_DRIVER_MEM") or default_driver_memory(),
+        )
     )
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

@@ -1,4 +1,6 @@
 import pytest
+from hypothesis import given, settings
+from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
 from adb_south_caucasus_etl_spark.functions.text import (
@@ -1083,6 +1085,33 @@ def test_gemm_grid_sizing_arithmetic():
     # tiny inputs: nothing to split
     assert gemm_grid(10, 10, 256 << 20) == (1, 1)
     assert gemm_grid(0, 100, 256 << 20) == (1, 1)
+
+
+@settings(max_examples=120, deadline=None)
+@given(
+    st.integers(min_value=1, max_value=10**9),
+    st.integers(min_value=1, max_value=10**9),
+    st.integers(min_value=1024, max_value=1 << 40),
+    st.integers(min_value=1, max_value=4096),
+)
+def test_gemm_grid_budget_invariant_fuzz(q, c, budget, min_cells):
+    """Property: for ANY sizes, budget, and parallelism floor, the
+    returned grid is valid (1..n per side), the per-cell float64 matrix
+    fits the budget whenever a fitting grid exists at all (1x1 cells are
+    8 bytes), and the WORK-DAMPED floor is met: the grid reaches
+    min_cells only while every cell can keep >= 2^20 score pairs —
+    below that, extra cells are pure per-group overhead and the floor
+    deliberately yields (small inputs get small grids)."""
+    from adb_south_caucasus_etl_spark.operators.similarity import gemm_grid
+
+    nq, nc = gemm_grid(q, c, budget, min_cells=min_cells)
+    assert 1 <= nq <= q and 1 <= nc <= c
+    # integer form of (q/nq)*(c/nc)*8 <= budget: float grouping error at
+    # the exact-equality boundary (settled grids hit nq*nc == k) would
+    # otherwise fail a budget that holds precisely
+    assert q * c * 8 <= budget * nq * nc, (nq, nc)
+    damped = min(min_cells, max(1, (q * c) >> 20))
+    assert nq * nc >= damped, (nq, nc, min_cells, damped)
 
 
 def test_cosine_pairs_zero_norm_rows_match_between_forms(spark):

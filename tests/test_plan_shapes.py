@@ -298,12 +298,15 @@ def test_aqe_skew_join_splits_hot_partition(spark):
     hot key's oversized shuffle partition at RUNTIME and splits it
     (SortMergeJoin(skew=true) + 'AQEShuffleRead coalesced and skewed').
     Thresholds are floored to make a synthetic 100k-row hot key qualify
-    at test scale; the manual salting operators (skew_salted_agg/join)
-    remain the pre-AQE / deterministic-layout alternative SCALE.md
-    documents."""
+    at test scale, and the shuffle partition count is pinned because at
+    4 partitions (the session default on a 4-core box) the hot partition
+    never reaches skewedPartitionFactor x the median; the manual salting
+    operators (skew_salted_agg/join) remain the pre-AQE /
+    deterministic-layout alternative SCALE.md documents."""
     from pyspark.sql import functions as F
 
     confs = {
+        "spark.sql.shuffle.partitions": "32",
         "spark.sql.adaptive.skewJoin.skewedPartitionFactor": "2",
         "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes": "8KB",
         "spark.sql.adaptive.advisoryPartitionSizeInBytes": "8KB",

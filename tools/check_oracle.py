@@ -5,23 +5,19 @@ over the same sf parquet, then compares row count, sorted column names, and
 canonicalized values (rows sorted by all columns). Queries without an oracle
 get a rows-only check (must run and return a stable schema).
 
-Usage: python tools/check_oracle.py [--window] [sf_dir] [query ...]
-
-``--window`` restricts the sweep to the next driver stamp window (the
-first 50 entries of ``queries()``, which is already in stamp-rotation
-order) — the 1-2 minute pre-flight for exactly the rows the next
-CORRECTNESS_r*.json will contain.
+Usage: python tools/check_oracle.py [sf_dir] [query ...]
 """
 
 from __future__ import annotations
 
+import os
 import sys
 import traceback
 
 import duckdb
 import pandas as pd
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from adb_south_caucasus_etl_spark.session import get_spark  # noqa: E402
 from adb_south_caucasus_etl_spark.sources.registry import TABLES  # noqa: E402
@@ -121,28 +117,14 @@ def compare(name: str, spark_pdf: pd.DataFrame, duck_pdf: pd.DataFrame) -> list[
     return problems
 
 
-#: driver stamp-window size (CORRECTNESS_r* rows per round, observed r2-r5)
-WINDOW = 50
-
-
 def main() -> int:
     args = sys.argv[1:]
-    window_only = "--window" in args
-    if window_only:
-        args = [a for a in args if a != "--window"]
     sf_dir = args[0] if args else "/root/testdata/sf0.01"
     only = set(args[1:])
     spark = get_spark("check_oracle")
     con = duck_con(sf_dir)
     queries = entry_mod.queries()
     oracles = entry_mod.oracle_sql()
-    if window_only:
-        # check exactly the queries the driver will stamp next round —
-        # queries() is already emitted in stamp-rotation order (reds
-        # first, then least-stamped), so the window is its head
-        head = list(queries)[:WINDOW]
-        only.update(head)
-        print(f"--window: checking the next {len(head)}-query stamp window")
     failed = []
     for name, fn in queries.items():
         if only and name not in only:

@@ -1,5 +1,6 @@
+import os
 import sys
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 from pyspark.sql import SparkSession
 spark = (SparkSession.builder.master("local[8]")
          .config("spark.sql.shuffle.partitions", "8")

@@ -14,10 +14,11 @@ pins and PLANS.md cannot diverge silently (r6 verdict item 8).
 
 from __future__ import annotations
 
+import os
 import re
 import sys
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from adb_south_caucasus_etl_spark.session import get_spark  # noqa: E402
 from adb_south_caucasus_etl_spark.workload import WORKLOAD  # noqa: E402
